@@ -21,6 +21,7 @@ Layout:
     functions/            scalar/text helper column functions
     sources/              readers (recursive text/report source, parquet)
     plans/                query registry wired into __spark_entry__
+    storage/              on-disk table protocol: manifest log, claims, OCC
     streaming/            Structured Streaming ingest + windowed aggs
 """
 

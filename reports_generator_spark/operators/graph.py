@@ -22,8 +22,6 @@ al.) below — O(log n) rounds on any topology, same output contract
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,9 +32,8 @@ from pyspark.sql import functions as F
 #: (guide §1.2: fix the distributed algorithm; §4.2: hand the batch to
 #: native code). Value-identical to the iterative loop (pinned in
 #: tests/test_dedup.py); a big graph never takes this branch, so the
-#: 100 TB path is unchanged. Env-overridable for cluster tuning
-#: (0 disables the fast path entirely).
-_CC_LOCAL_EDGE_CAP = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_CAP", "25000"))
+#: 100 TB path is unchanged.
+_CC_LOCAL_EDGE_CAP = 25000
 
 
 def _cc_union_find_local(base: DataFrame) -> DataFrame:
@@ -99,11 +96,20 @@ def connected_components(
     max_iter: int = 20,
 ) -> DataFrame:
     """(node, cluster_id) for every node in `edges`, where cluster_id
-    is the minimum node id in the node's connected component."""
+    is the minimum node id in the node's connected component. Edges
+    with a null endpoint are dropped first, so a null is never a node.
+
+    A small graph (≤ ``_CC_LOCAL_EDGE_CAP`` directed edges) runs as one
+    single-task union-find that always converges fully; ``max_iter``
+    bounds only the iterative min-label path taken above the cap."""
     # materialize the (possibly expensive) upstream pair generation
     # exactly once — the symmetric union below references it twice, and
     # every round joins against the edge set
-    base = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint()
+    base = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
+        .localCheckpoint()
+    )
     # graph-sized iteration parallelism (see pagerank_undirected): an
     # inherited wide layout turns every min-label round over a small
     # graph into dozens of near-empty tasks; ~50k endpoints/partition
@@ -192,7 +198,8 @@ def connected_components_star(
     """
     from pyspark.sql import Window
 
-    # canonical orientation u > v (self-loops dropped)
+    # canonical orientation u > v; self-loops AND null-endpoint edges
+    # are dropped here, first (a != b is never true on a null)
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col(src) != F.col(dst)
     )

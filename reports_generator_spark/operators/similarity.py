@@ -20,7 +20,6 @@ reproducible against any float64 oracle.
 from __future__ import annotations
 
 import math
-import os
 import random
 
 import numpy as np
@@ -471,8 +470,8 @@ def lsh_auto_params(
 #: (embedding_knn_graph_lsh sf1/32c median 16.1 → 11.9 s; sf0.1
 #: unaffected — fixture buckets rarely exceed either cap). Chunked ≡
 #: unchunked is pinned in tests/test_similarity.py, so the cap is a
-#: pure performance knob.
-LSH_CHUNK_CAP = int(os.environ.get("SPARK_GRAFT_LSH_CHUNK_CAP", "1024"))
+#: pure performance constant.
+LSH_CHUNK_CAP = 1024
 
 
 def _pack_lsh_chunks(hashed: DataFrame, chunk_cap: int) -> DataFrame:

@@ -27,6 +27,7 @@ from ..config import ReportConfig
 from ..ingest import ingest_reports
 from ..ingest.fixtures import write_report_files
 from ..ingest.golden import expected_erp_rows, write_golden_csv
+from ..storage import fixture_base
 from .registry import query
 
 _FIXED_GEN_DATE = "2026-01-01 00:00:00"
@@ -138,8 +139,6 @@ def scan_json_schema_drift_rescue(spark: SparkSession, sf_dir: str) -> DataFrame
     At 100 TB this is scan-speed: the rescue path adds one map column,
     not a reprocessing job when a producer ships a new field."""
     import shutil
-
-    from .scale_joins import fixture_base
 
     # appId-scoped (fixture_base): concurrent sessions on the same
     # sf_dir must not rmtree a fixture another session's lazy plan
@@ -302,7 +301,6 @@ def stream_report_ingest_python_datasource(
     import uuid
 
     from ..sources.report_datasource import build_report_datasource
-    from .scale_joins import fixture_base
 
     ensure_goldens()
     spark.dataSource.register(build_report_datasource())
@@ -348,7 +346,6 @@ def sink_report_python_datasource_roundtrip(
     import shutil
 
     from ..sources.report_datasource import build_report_datasource
-    from .scale_joins import fixture_base
 
     ensure_goldens()
     spark.dataSource.register(build_report_datasource())
@@ -395,7 +392,6 @@ def sink_report_stream_python_datasource(
     import uuid
 
     from ..sources.report_datasource import build_report_datasource
-    from .scale_joins import fixture_base
 
     ensure_goldens()
     spark.dataSource.register(build_report_datasource())

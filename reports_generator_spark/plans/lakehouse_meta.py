@@ -31,7 +31,6 @@ of the engine the reference's design could never reach.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 
@@ -41,48 +40,28 @@ from pyspark.sql import functions as F
 from ..sources import load_table
 from ..functions.diff import one_sided_diff_count, symmetric_diff_count
 from .registry import query
-from .scale_joins import (
+from ..storage import (
     CommitConflict,
-    _log_read,
-    _log_versions,
     atomic_claim,
-    cdc_row_diff,
     commit_with_conflict_detection,
+    expire_snapshots,
     fixture_base,
+    log_claim,
+    log_create,
+    log_read,
+    log_versions,
+    mark_built,
+    needs_build,
+    read_version,
+    write_atomic,
 )
+from .scale_joins import cdc_row_diff
 
 
 # --------------------------------------------------------------------------
 # Snapshot expiry on the full-file-list manifest log
+# (storage.expire_snapshots)
 # --------------------------------------------------------------------------
-def expire_snapshots(base: str, keep_last_n: int) -> tuple[list[int], list[str]]:
-    """Drop every manifest version older than the last ``keep_last_n``
-    and return ``(expired_versions, unreferenced_files)`` — the data
-    files referenced ONLY by expired versions, now safe to vacuum.
-
-    Crash-safety ordering: manifests are removed BEFORE any caller
-    deletes data files, so at no point does a live manifest reference
-    a missing file; a crash mid-expiry leaves extra (still-valid)
-    manifests or orphaned data files — both re-derivable by a retry,
-    never a corrupt snapshot. At 100 TB the retention horizon is the
-    contract that bounds BOTH the log length and the storage held
-    hostage by time travel."""
-    versions = _log_versions(base)
-    if keep_last_n < 1:
-        raise ValueError("must keep at least the latest snapshot")
-    kept, expired = versions[-keep_last_n:], versions[:-keep_last_n]
-    ref_kept: set[str] = set()
-    for v in kept:
-        ref_kept.update(_log_read(base, v))
-    ref_expired: set[str] = set()
-    for v in expired:
-        ref_expired.update(_log_read(base, v))
-    unreferenced = sorted(ref_expired - ref_kept)
-    for v in expired:
-        os.remove(os.path.join(base, f"manifest-v{v}.txt"))
-    return expired, unreferenced
-
-
 @query(
     "expire_snapshots_retention",
     oracle="""
@@ -132,8 +111,7 @@ def expire_snapshots_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter(k % 4 == residue).write.parquet(os.path.join(data, name))
     o.filter(k % 4 == 0).coalesce(1).write.parquet(os.path.join(data, "b0c"))
 
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("b0")
+    log_create(base, ["b0"])
     commit_with_conflict_detection(base, 1, add=["b1"], remove=[], read_set=set())
     commit_with_conflict_detection(  # compaction: b0 -> b0c
         base, 2, add=["b0c"], remove=["b0"], read_set={"b0"}
@@ -141,13 +119,8 @@ def expire_snapshots_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_with_conflict_detection(base, 3, add=["b2"], remove=[], read_set=set())
     commit_with_conflict_detection(base, 4, add=["b3"], remove=[], read_set=set())
 
-    def snap(v: int) -> DataFrame:
-        return spark.read.parquet(
-            *[os.path.join(data, b) for b in _log_read(base, v)]
-        )
-
     def agg2(v: int) -> tuple[int, int]:
-        r = snap(v).agg(
+        r = read_version(spark, base, v).agg(
             F.count(F.lit(1)), F.sum("o_orderkey").cast("bigint")
         ).first()
         return r[0], r[1]
@@ -162,7 +135,7 @@ def expire_snapshots_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # time travel to an expired version must fail cleanly
     try:
-        _log_read(base, expired[0])
+        log_read(base, expired[0])
         travel_fails = 0
     except FileNotFoundError:
         travel_fails = 1
@@ -191,16 +164,6 @@ def expire_snapshots_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CKPT_EVERY = 8
 
 
-def _write_atomic(path: str, content: str) -> None:
-    """Fully write a temp file, then os.replace into place — a reader
-    sees the old file, the new file, or no file; never a torn write
-    (the same discipline as every other log write in the repo)."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(content)
-    os.replace(tmp, path)
-
-
 def delta_commit(
     base: str, parent_v: int, add: list[str], remove: list[str]
 ) -> int:
@@ -217,17 +180,17 @@ def delta_commit(
     commit_with_conflict_detection's job and composes by claiming the
     delta file name the same way."""
     v = parent_v + 1
-    _write_atomic(
+    write_atomic(
         os.path.join(base, f"delta-v{v}.txt"),
         "\n".join([f"R {b}" for b in remove] + [f"A {b}" for b in add]),
     )
     if v % _CKPT_EVERY == 0:
         files, _ = read_snapshot_checkpointed(base)  # prev ckpt + ≤K deltas
-        _write_atomic(
+        write_atomic(
             os.path.join(base, f"checkpoint-v{v}.txt"),
             "\n".join(sorted(files)),
         )
-        _write_atomic(os.path.join(base, "_last_checkpoint"), str(v))
+        write_atomic(os.path.join(base, "_last_checkpoint"), str(v))
     return v
 
 
@@ -370,7 +333,7 @@ def read_mor_snapshot(
     survive. Each DV is applied as a broadcast anti-join at its
     position in the fold."""
     rel: DataFrame | None = None
-    for entry in _log_read(base, v):
+    for entry in log_read(base, v):
         if entry.startswith("dv:"):
             dv = spark.read.parquet(os.path.join(data, entry[3:]))
             if rel is not None:
@@ -440,8 +403,7 @@ def merge_mor_transactional(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
     )
     t.filter(k % 2 == 0).write.parquet(os.path.join(data, "b-even"))
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("b-even")
+    log_create(base, ["b-even"])
 
     def data_files() -> dict[str, float]:
         out: dict[str, float] = {}
@@ -553,8 +515,8 @@ def mv_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _ensure_cdc_table(spark, sf_dir)
     data = os.path.join(base, "data")
-    v1_files = set(_log_read(base, 1))
-    v2_files = set(_log_read(base, 2))
+    v1_files = set(log_read(base, 1))
+    v2_files = set(log_read(base, 2))
     grp = (F.col("o_orderkey") % 10).alias("grp")
 
     def snap(files: set[str]) -> DataFrame:
@@ -624,9 +586,8 @@ def _ensure_hidden_part_table(spark: SparkSession, sf_dir: str) -> str:
     never sees p_year/p_bucket; scan planning derives them. Built once
     per session (readiness marker LAST)."""
     base = fixture_base(spark, sf_dir, "hp")
-    if os.path.exists(os.path.join(base, "_READY")):
+    if not needs_build(base):
         return base
-    shutil.rmtree(base, ignore_errors=True)
     data = os.path.join(base, "data")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -636,7 +597,7 @@ def _ensure_hidden_part_table(spark: SparkSession, sf_dir: str) -> str:
     o.withColumn("p_year", F.year("o_orderdate")).withColumn(
         "p_bucket", (F.col("o_orderkey") % _HP_BUCKETS).cast("int")
     ).write.partitionBy("p_year", "p_bucket").parquet(data)
-    open(os.path.join(base, "_READY"), "w").close()
+    mark_built(base)
     return base
 
 
@@ -812,9 +773,8 @@ def _ensure_colmap_table(spark: SparkSession, sf_dir: str) -> str:
     amount_cents — only the mapping file changes, never the data."""
     import json
     base = fixture_base(spark, sf_dir, "cm")
-    if os.path.exists(os.path.join(base, "_READY")):
+    if not needs_build(base):
         return base
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(base)
     o = load_table(spark, sf_dir, "orders")
     o.select(
@@ -825,11 +785,8 @@ def _ensure_colmap_table(spark: SparkSession, sf_dir: str) -> str:
         (1, {"o_orderkey": "col_1", "cents": "col_2"}),
         (2, {"o_orderkey": "col_1", "amount_cents": "col_2"}),
     ):
-        tmp = os.path.join(base, f"mapping-v{v}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(mapping, f)
-        os.replace(tmp, os.path.join(base, f"mapping-v{v}.json"))
-    open(os.path.join(base, "_READY"), "w").close()
+        write_atomic(os.path.join(base, f"mapping-v{v}.json"), json.dumps(mapping))
+    mark_built(base)
     return base
 
 
@@ -924,7 +881,7 @@ def evolve_schema(
     vanish). Data files are never touched — the Delta/Iceberg ALTER
     TABLE economics: at 100 TB, ADD or DROP COLUMN is a one-file
     metadata commit, not a table rewrite."""
-    old_ptr = _schema_pointer(_log_read(base, parent_v))
+    old_ptr = _schema_pointer(log_read(base, parent_v))
     write_schema_version(base, new_schema_v, columns)
     return commit_with_conflict_detection(
         base,
@@ -948,7 +905,7 @@ def read_evolved(spark: SparkSession, base: str, v: int) -> DataFrame:
     shape and v_post the post-evolution shape from the SAME files."""
     import json
 
-    lines = _log_read(base, v)
+    lines = log_read(base, v)
     with open(os.path.join(base, f"schema-v{_schema_pointer(lines)}.json")) as f:
         columns = json.load(f)
     files = [
@@ -1010,7 +967,7 @@ def build_evolution_table(spark: SparkSession, sf_dir: str, tag: str) -> str:
         os.path.join(data, "a")
     )
     write_schema_version(base, 1, EVO_SCHEMAS[1])
-    assert atomic_claim(os.path.join(base, "manifest-v1.txt"), "a\n@schema=1")
+    log_create(base, ["a", "@schema=1"])
 
     o.filter(k % 4 == 1).select("col_1", "col_2").write.parquet(
         os.path.join(data, "b")
@@ -1160,7 +1117,7 @@ def scan_time_travel_as_of_timestamp(spark: SparkSession, sf_dir: str) -> DataFr
     at 100 TB it costs one lookup in the commit log regardless of
     table size (string comparison suffices here because the synthetic
     commit times share one format and zone)."""
-    from .scale_joins import _ensure_versioned_table, _read_version
+    from .scale_joins import _ensure_versioned_table
 
     base = _ensure_versioned_table(spark, sf_dir, "timetravel")
 
@@ -1172,11 +1129,11 @@ def scan_time_travel_as_of_timestamp(spark: SparkSession, sf_dir: str) -> DataFr
     except ValueError:
         before_first_fails = 1
 
-    mid = _read_version(spark, base, v_mid).agg(
+    mid = read_version(spark, base, v_mid).agg(
         F.count(F.lit(1)).alias("n_rows_mid"),
         F.sum("o_orderkey").cast("bigint").alias("checksum_mid"),
     )
-    boundary = _read_version(spark, base, v_boundary).agg(
+    boundary = read_version(spark, base, v_boundary).agg(
         F.count(F.lit(1)).alias("n_rows_boundary"),
         F.sum("o_orderkey").cast("bigint").alias("checksum_boundary"),
         F.lit(v_mid).cast("bigint").alias("resolved_mid"),
@@ -1199,9 +1156,9 @@ def restore_to_version(base: str, target_v: int) -> tuple[int, int]:
     the same OCC conflict detection as any writer). Metadata-only:
     zero data files are moved or rewritten, at 100 TB the cost is one
     manifest write regardless of table size."""
-    latest = _log_versions(base)[-1]
-    current = set(_log_read(base, latest))
-    target = set(_log_read(base, target_v))
+    latest = log_versions(base)[-1]
+    current = set(log_read(base, latest))
+    target = set(log_read(base, target_v))
     return commit_with_conflict_detection(
         base,
         latest,
@@ -1264,24 +1221,21 @@ def table_rollback_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, residue in (("b0", 0), ("b1", 1), ("b2", 2)):
         o.filter(k % 3 == residue).write.parquet(os.path.join(data, name))
 
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("b0")
+    log_create(base, ["b0"])
     commit_with_conflict_detection(base, 1, add=["b1"], remove=[], read_set=set())
     commit_with_conflict_detection(base, 2, add=["b2"], remove=[], read_set=set())
 
     restore_v, _ = restore_to_version(base, target_v=2)
 
     def snap(v: int) -> DataFrame:
-        return spark.read.parquet(
-            *[os.path.join(data, b) for b in _log_read(base, v)]
-        )
+        return read_version(spark, base, v)
 
     restored = snap(restore_v).agg(
         F.count(F.lit(1)).alias("n_rows_restored"),
         F.sum("o_orderkey").cast("bigint").alias("checksum_restored"),
     )
-    matches_target = int(set(_log_read(base, restore_v)) == set(_log_read(base, 2)))
-    history_ok = int(_log_versions(base) == [1, 2, 3, 4])
+    matches_target = int(set(log_read(base, restore_v)) == set(log_read(base, 2)))
+    history_ok = int(log_versions(base) == [1, 2, 3, 4])
     # rollback's CDC: rows present in v3 but not in the restore head
     rolled_back = one_sided_diff_count(
         snap(3).select("o_orderkey"), snap(restore_v).select("o_orderkey")
@@ -1449,8 +1403,7 @@ def scan_branch_tag_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name, residue in (("b0", 0), ("b1", 1), ("b2", 2), ("b3", 3)):
         o.filter(k % 4 == residue).write.parquet(os.path.join(data, name))
 
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("b0")
+    log_create(base, ["b0"])
     commit_with_conflict_detection(base, 1, add=["b1"], remove=[], read_set=set())
     set_branch_head(base, "main", 2)
     create_tag(base, "q1-audit", 2)
@@ -1463,10 +1416,7 @@ def scan_branch_tag_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     set_branch_head(base, "dev", 4)
 
     def read_ref(name: str) -> DataFrame:
-        v = resolve_ref(base, name)
-        return spark.read.parquet(
-            *[os.path.join(data, b) for b in _log_read(base, v)]
-        )
+        return read_version(spark, base, resolve_ref(base, name))
 
     main_before = read_ref("main").agg(
         F.count(F.lit(1)).alias("n_rows_main_before"),
@@ -1619,16 +1569,14 @@ def manifest_multi_table_transaction(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
     # empty genesis: root v1 points both tables at their empty v1
-    with open(os.path.join(fact_log, "manifest-v1.txt"), "w") as f:
-        f.write("")
-    with open(os.path.join(sum_log, "manifest-v1.txt"), "w") as f:
-        f.write("")
+    log_create(fact_log, [])
+    log_create(sum_log, [])
     atomic_claim(os.path.join(base, "root-v1.txt"), "fact 1\nsummary 1")
 
     def read_pair() -> tuple[DataFrame, DataFrame]:
         root = read_root(base)
         def tbl(log: str, data: str, tv: int, schema: str) -> DataFrame:
-            files = _log_read(log, tv)
+            files = log_read(log, tv)
             if not files:
                 return spark.createDataFrame([], schema)
             return spark.read.parquet(*[os.path.join(data, b) for b in files])
@@ -1641,11 +1589,11 @@ def manifest_multi_table_transaction(spark: SparkSession, sf_dir: str) -> DataFr
 
     def txn(slice_id: int) -> None:
         fv, _ = commit_with_conflict_detection(
-            fact_log, _log_versions(fact_log)[-1],
+            fact_log, log_versions(fact_log)[-1],
             add=[f"slices/s={slice_id}"], remove=[], read_set=set(),
         )
         sv, _ = commit_with_conflict_detection(
-            sum_log, _log_versions(sum_log)[-1],
+            sum_log, log_versions(sum_log)[-1],
             add=[f"slices/s={slice_id}"], remove=[], read_set=set(),
         )
         publish_root(base, {"fact": fv, "summary": sv})
@@ -1655,11 +1603,11 @@ def manifest_multi_table_transaction(spark: SparkSession, sf_dir: str) -> DataFr
     # transaction 2, paused in the torn window: both table logs have
     # advanced, the root has not — a reader must still see txn 1 only
     fv, _ = commit_with_conflict_detection(
-        fact_log, _log_versions(fact_log)[-1],
+        fact_log, log_versions(fact_log)[-1],
         add=["slices/s=1"], remove=[], read_set=set(),
     )
     sv, _ = commit_with_conflict_detection(
-        sum_log, _log_versions(sum_log)[-1],
+        sum_log, log_versions(sum_log)[-1],
         add=["slices/s=1"], remove=[], read_set=set(),
     )
     mid_fact, mid_sum = read_pair()
@@ -1742,7 +1690,7 @@ def manifest_stats_file_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("o_orderkey").alias("mn"), F.max("o_orderkey").alias("mx"))
         .collect()  # bounded by bucket count, never by rows
     }
-    _write_atomic(
+    write_atomic(
         os.path.join(base, "stats-v1.txt"),
         "\n".join(f"{b} {mn} {mx}" for b, (mn, mx) in sorted(stats.items())),
     )
@@ -1826,10 +1774,9 @@ def scan_snapshot_isolation_repeatable_read(
         "p"
     ).parquet(os.path.join(data, "slices"))
 
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("slices/p=0")
+    log_create(base, ["slices/p=0"])
 
-    pinned = _log_read(base, 1)  # the snapshot pin: resolved ONCE
+    pinned = log_read(base, 1)  # the snapshot pin: resolved ONCE
 
     def read_files(files: list[str]) -> DataFrame:
         return spark.read.parquet(*[os.path.join(data, b) for b in files])
@@ -1848,7 +1795,7 @@ def scan_snapshot_isolation_repeatable_read(
     ).first()
     held = int(tuple(first) == tuple(repeat))
 
-    new_reader = read_files(_log_read(base, _log_versions(base)[-1]))
+    new_reader = read_files(log_read(base, log_versions(base)[-1]))
     return new_reader.agg(
         F.lit(first[0]).cast("bigint").alias("n_rows_first"),
         F.lit(first[1]).cast("bigint").alias("checksum_first"),
@@ -1897,16 +1844,16 @@ def table_history_metadata_relation(spark: SparkSession, sf_dir: str) -> DataFra
     log-derived columns cost O(versions) tiny file reads — no data
     scan; the verification columns cost one scan per version and are
     the audit's choice, not the operator's requirement."""
-    from .scale_joins import _ensure_versioned_table, _read_version
+    from .scale_joins import _ensure_versioned_table
 
     base = _ensure_versioned_table(spark, sf_dir, "history")
-    versions = _log_versions(base)
+    versions = log_versions(base)
 
     out = None
     prev: set[str] = set()
     for v in versions:
-        files = set(_log_read(base, v))
-        row = _read_version(spark, base, v).agg(
+        files = set(log_read(base, v))
+        row = read_version(spark, base, v).agg(
             F.lit(v).cast("int").alias("version"),
             F.lit(len(files)).cast("int").alias("n_files"),
             F.lit(len(files - prev)).cast("int").alias("n_files_added"),
@@ -1971,20 +1918,14 @@ def sink_wap_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b"
     ).parquet(os.path.join(data, "slices"))
 
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("slices/b=0")
+    log_create(base, ["slices/b=0"])
     commit_with_conflict_detection(
         base, 1, add=["slices/b=1"], remove=[], read_set=set()
     )
     set_branch_head(base, "main", 2)
 
     def read_ref(name: str) -> DataFrame:
-        return spark.read.parquet(
-            *[
-                os.path.join(data, b)
-                for b in _log_read(base, resolve_ref(base, name))
-            ]
-        )
+        return read_version(spark, base, resolve_ref(base, name))
 
     def wap(batch: str, branch: str, expectation) -> bool:
         """Commit ``batch`` onto a fresh audit branch forked from MAIN,
@@ -1998,12 +1939,10 @@ def sink_wap_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         free version number with content = parent-branch files + batch.
         """
         parent = resolve_ref(base, "main")
-        content = "\n".join(_log_read(base, parent) + [batch])
+        files = log_read(base, parent) + [batch]
         while True:
-            v = _log_versions(base)[-1] + 1
-            if atomic_claim(
-                os.path.join(base, f"manifest-v{v}.txt"), content
-            ):
+            v = log_versions(base)[-1] + 1
+            if log_claim(base, v, files):
                 break  # lost slots just mean another writer took a
                 # version number; branch content never rebases
         set_branch_head(base, branch, v)
@@ -2035,13 +1974,13 @@ def sink_wap_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     green_ok = wap("slices/b=2", "audit-g", green_expect)
     assert "slices/b=3" not in set(
-        _log_read(base, resolve_ref(base, "audit-g"))
+        log_read(base, resolve_ref(base, "audit-g"))
     ), "abandoned red branch leaked into the green audit branch"
 
-    main_files = set(_log_read(base, resolve_ref(base, "main")))
+    main_files = set(log_read(base, resolve_ref(base, "main")))
     red_isolated = int("slices/b=3" not in main_files)
     red_branch_lives = int(
-        "slices/b=3" in set(_log_read(base, resolve_ref(base, "audit-r")))
+        "slices/b=3" in set(log_read(base, resolve_ref(base, "audit-r")))
     )
     red_rows = read_ref("audit-r").filter(k % 4 == 3)
 
@@ -2078,7 +2017,7 @@ def read_manifest_rooted(spark: SparkSession, base: str, v: int) -> DataFrame:
     this; data files are owned by whoever wrote them, manifests only
     point)."""
     root = os.path.dirname(base.rstrip("/"))
-    files = [os.path.join(root, ln) for ln in _log_read(base, v)]
+    files = [os.path.join(root, ln) for ln in log_read(base, v)]
     return spark.read.parquet(*files)
 
 
@@ -2104,10 +2043,7 @@ def build_clone_pair(spark: SparkSession, sf_dir: str, tag: str):
     os.makedirs(data)
     for name, pred in (("a", k % 4 == 0), ("b", k % 4 == 1)):
         o.filter(pred).write.parquet(os.path.join(data, name))
-    assert atomic_claim(
-        os.path.join(base_src, "manifest-v1.txt"),
-        f"{src_tag}/data/a\n{src_tag}/data/b",
-    )
+    log_create(base_src, [f"{src_tag}/data/a", f"{src_tag}/data/b"])
 
     def src_mtimes() -> dict[str, float]:
         out: dict[str, float] = {}
@@ -2122,10 +2058,7 @@ def build_clone_pair(spark: SparkSession, sf_dir: str, tag: str):
 
     # CLONE: one metadata commit referencing the source's v1 files
     os.makedirs(os.path.join(base_cl, "data"))
-    assert atomic_claim(
-        os.path.join(base_cl, "manifest-v1.txt"),
-        "\n".join(_log_read(base_src, 1)),
-    )
+    log_create(base_cl, log_read(base_src, 1))
 
     # independent evolution — source appends c
     o.filter(k % 4 == 2).write.parquet(os.path.join(data, "c"))
@@ -2227,8 +2160,8 @@ def vacuum_shared_root(root: str, log_bases: list[str]) -> list[str]:
     tags = {os.path.basename(b.rstrip("/")) for b in log_bases}
     referenced: set[str] = set()
     for base in log_bases:
-        for v in _log_versions(base):
-            referenced.update(_log_read(base, v))
+        for v in log_versions(base):
+            referenced.update(log_read(base, v))
     bad = sorted(
         e
         for e in referenced
@@ -2309,8 +2242,8 @@ def vacuum_clone_reference_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the naive per-table candidate set (dry-run, never executed)
     src_ref: set[str] = set()
-    for v in _log_versions(base_src):
-        src_ref.update(_log_read(base_src, v))
+    for v in log_versions(base_src):
+        src_ref.update(log_read(base_src, v))
     naive = {
         f"{src_tag}/data/{d}"
         for d in os.listdir(os.path.join(base_src, "data"))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
 from ..sources import load_table
+from ..storage import fixture_base
 from .registry import query
 
 
@@ -1891,16 +1892,8 @@ def scan_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFrame
     is built from `orders` (key-modulo corruption, oracle-mirrored);
     the double→string→double round-trip is exact, so the good-row
     DECIMAL sum hash-matches the direct aggregation."""
-    import hashlib
-    import os
-    import tempfile
-
     o = _t(spark, sf_dir, "orders")
-    # appId in the tag: concurrent sessions get isolated fixture dirs
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"rg_dirty_csv_{tag}")
+    path = fixture_base(spark, sf_dir, "dirty_csv")
     line = F.concat_ws(
         ",",
         F.col("o_orderkey").cast("string"),

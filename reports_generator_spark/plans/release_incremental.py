@@ -71,6 +71,13 @@ from ..functions import (
     tokens_col,
 )
 from ..sources import load_table
+from ..storage import (
+    commit_with_conflict_detection,
+    fixture_base,
+    log_create,
+    log_read,
+    log_versions,
+)
 from .dedup import _INC_BANDS, _INC_NH, _INC_THR
 from .registry import query
 from .release import _HASH_SQL, _REL_CAPACITY, _REL_Q_MIN, _REL_SHARDS
@@ -488,14 +495,6 @@ def corpus_release_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (base ∪ appended pack read back post-commit) is compared
     exceptAll-both-ways against the twin's one-shot union pack, and the
     batch keep/mix sets against the twin's in-memory epoch-1 frames."""
-    from .scale_joins import (
-        _log_read,
-        _log_versions,
-        atomic_claim,
-        commit_with_conflict_detection,
-        fixture_base,
-    )
-
     base = fixture_base(spark, sf_dir, "relinc")
     if os.path.exists(base):
         shutil.rmtree(base)
@@ -622,9 +621,7 @@ def corpus_release_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes["batch_raw"] = docs.filter(is_batch).select("doc_id", "lang", "text")
     with ThreadPoolExecutor(max_workers=3) as pool:
         list(pool.map(_write, writes.items()))
-    assert atomic_claim(
-        os.path.join(base, "manifest-v1.txt"), "\n".join(sorted(state))
-    )
+    log_create(base, sorted(state))
 
     # ---- the INCREMENTAL flow: batch landing zone + state ONLY --------
     # the epoch-1 REBUILD TWIN depends only on the in-memory epoch-0
@@ -738,10 +735,10 @@ def corpus_release_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_set={"state_fps_base", "state_sigs_base", "state_evsh",
                   "cursor_v1"},
     )
-    head = set(_log_read(base, _log_versions(base)[-1]))
+    head = set(log_read(base, log_versions(base)[-1]))
     occ_ok = (
         committed_v == 2
-        and _log_versions(base) == [1, 2]
+        and log_versions(base) == [1, 2]
         and head == (set(state) - {"cursor_v1"})
         | {"packed_e1", "state_fps_e1", "state_sigs_e1", "cursor_v2"}
     )

@@ -47,6 +47,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from ..storage import (
+    CommitConflict,
+    commit_with_conflict_detection,
+    fixture_base,
+    log_create,
+    log_read,
+    log_versions,
+    mark_built,
+    needs_build,
+    read_version,
+    write_atomic,
+)
 from .features import _z_interleave, _ZBITS
 from .registry import query
 
@@ -440,12 +452,7 @@ def delete_copy_on_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-level COW (Delta/Iceberg) refines the same plan to the file
     granularity. The layout write is part of the run because the op
     MUTATES it (same contract as sink_mode_auto's fixture reset)."""
-    import tempfile
-
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"rg_cow_{tag}")
+    path = fixture_base(spark, sf_dir, "cow")
     shutil.rmtree(path, ignore_errors=True)
 
     o = load_table(spark, sf_dir, "orders")
@@ -508,13 +515,8 @@ def compact_small_files_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     target is bytes, not rows (maxRecordsPerFile /
     repartitionByRange on size tiers); rows keep the fixture exact
     and the plan identical."""
-    import tempfile
-
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    frag = os.path.join(tempfile.gettempdir(), f"rg_frag_{tag}")
-    compacted = os.path.join(tempfile.gettempdir(), f"rg_compact_{tag}")
+    frag = fixture_base(spark, sf_dir, "frag")
+    compacted = fixture_base(spark, sf_dir, "compact")
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey")
     o.repartition(64).write.mode("overwrite").parquet(frag)
@@ -580,12 +582,7 @@ def sink_atomic_commit_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     the committed slice. Completes the sink family:
     sink_mode_auto (existence-probed mode), merge_upsert (row
     idempotency), this key (atomicity)."""
-    import tempfile
-
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"rg_txn_{tag}")
+    base = fixture_base(spark, sf_dir, "txn")
     shutil.rmtree(base, ignore_errors=True)
     staging = os.path.join(base, "_staging")
     data = os.path.join(base, "data")
@@ -601,10 +598,8 @@ def sink_atomic_commit_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(manifest):
             with open(manifest) as f:
                 committed = f.read().split()
-        tmp = manifest + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(committed + [f"batch-{batch_id}"]))
-        os.replace(tmp, manifest)  # the atomic publish point
+        # the atomic publish point
+        write_atomic(manifest, "\n".join(committed + [f"batch-{batch_id}"]))
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey")
     # batch 1: staged AND committed
@@ -789,12 +784,7 @@ def merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes the merged table's stats from raw orders.
     At 100 TB: the same plan, with mergeSchema resolved from the table
     format's schema log instead of footer union."""
-    import tempfile
-
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"rg_mergevo_{tag}")
+    path = fixture_base(spark, sf_dir, "mergevo")
     shutil.rmtree(path, ignore_errors=True)
 
     o = load_table(spark, sf_dir, "orders")
@@ -944,57 +934,34 @@ def _join_skew_aqe_body(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (sink_atomic_commit_protocol) exists to enable. The manifest history
 # IS the table-format metadata log (Delta/Iceberg snapshots) in its
 # minimal honest form: one file per version listing committed batch
-# dirs, `current` pointing at the latest.
+# dirs (storage.table_log).
 # --------------------------------------------------------------------------
 def _ensure_versioned_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     """Build (once per session+name) a 3-version manifest-logged table:
     v1 = batch-1 (o_orderkey%3=1), v2 = +batch-2 (%3=2),
     v3 = +batch-3 (%3=0), plus one STAGED-BUT-ORPHANED dir no manifest
     references (the vacuum target). Returns the base path."""
-    import tempfile
-
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + name + ":" + spark.sparkContext.applicationId)
-        .encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"rg_tt_{tag}")
-    # readiness marker is written LAST (after the orphan and `current`) —
-    # probing an intermediate file like manifest-v3.txt would let a
-    # crash mid-build cache a half-built fixture forever
-    if os.path.exists(os.path.join(base, "_READY")):
+    base = fixture_base(spark, sf_dir, f"tt_{name}")
+    if not needs_build(base):
         return base
-    shutil.rmtree(base, ignore_errors=True)
     os.makedirs(os.path.join(base, "data"))
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    committed: list[str] = []
     for v, residue in ((1, 1), (2, 2), (3, 0)):
-        batch = f"batch-{v}"
         o.filter(F.col("o_orderkey") % 3 == residue).write.parquet(
-            os.path.join(base, "data", batch)
+            os.path.join(base, "data", f"batch-{v}")
         )
-        committed.append(batch)
-        tmp = os.path.join(base, f"manifest-v{v}.txt.tmp")
-        with open(tmp, "w") as f:
-            f.write("\n".join(committed))
-        os.replace(tmp, os.path.join(base, f"manifest-v{v}.txt"))
+    log_create(base, ["batch-1"])
+    for v in (2, 3):
+        commit_with_conflict_detection(
+            base, v - 1, add=[f"batch-{v}"], remove=[], read_set=set()
+        )
     # the orphan: staged by a writer that died before commit
     o.filter(F.col("o_orderkey") % 3 == 1).write.parquet(
         os.path.join(base, "data", "batch-orphan")
     )
-    with open(os.path.join(base, "current.tmp"), "w") as f:
-        f.write("manifest-v3.txt")
-    os.replace(os.path.join(base, "current.tmp"), os.path.join(base, "current"))
-    open(os.path.join(base, "_READY"), "w").close()
+    mark_built(base)
     return base
-
-
-def _read_version(spark: SparkSession, base: str, v: int) -> DataFrame:
-    with open(os.path.join(base, f"manifest-v{v}.txt")) as f:
-        batches = f.read().split()  # metadata-only driver read
-    return spark.read.parquet(
-        *[os.path.join(base, "data", b) for b in batches]
-    )
 
 
 @query(
@@ -1024,7 +991,7 @@ def scan_time_travel_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _ensure_versioned_table(spark, sf_dir, "timetravel")
     out = None
     for v in (1, 2, 3):
-        row = _read_version(spark, base, v).agg(
+        row = read_version(spark, base, v).agg(
             F.lit(v).cast("bigint").alias("version"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
             F.sum("o_orderkey").cast("bigint").alias("checksum"),
@@ -1056,16 +1023,12 @@ def scan_incremental_since_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
     full table from raw orders."""
     base = _ensure_versioned_table(spark, sf_dir, "timetravel")
 
-    def batches(v: int) -> list[str]:
-        with open(os.path.join(base, f"manifest-v{v}.txt")) as f:
-            return f.read().split()
-
-    new = [b for b in batches(3) if b not in set(batches(1))]
+    new = [b for b in log_read(base, 3) if b not in set(log_read(base, 1))]
     inc = spark.read.parquet(*[os.path.join(base, "data", b) for b in new]).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows_incremental"),
         F.sum("o_orderkey").cast("bigint").alias("incremental_checksum"),
     )
-    full = _read_version(spark, base, 3).agg(
+    full = read_version(spark, base, 3).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows_full"),
         F.sum("o_orderkey").cast("bigint").alias("full_checksum"),
     )
@@ -1102,8 +1065,7 @@ def vacuum_orphan_files_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     data = os.path.join(base, "data")
     referenced: set[str] = set()
     for v in (1, 2, 3):
-        with open(os.path.join(base, f"manifest-v{v}.txt")) as f:
-            referenced.update(f.read().split())
+        referenced.update(log_read(base, v))
     # idempotent within a session: a PREVIOUS invocation vacuumed the
     # fixture's orphan, so re-stage it (a dying writer leaving debris is
     # the op's precondition, not a one-shot accident) — without this a
@@ -1116,7 +1078,7 @@ def vacuum_orphan_files_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     orphans = [d for d in sorted(os.listdir(data)) if d not in referenced]
     for d in orphans:
         shutil.rmtree(os.path.join(data, d))
-    after = _read_version(spark, base, 3)
+    after = read_version(spark, base, 3)
     return after.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows_after_vacuum"),
         F.sum("o_orderkey").cast("bigint").alias("checksum_after_vacuum"),
@@ -1195,18 +1157,9 @@ def scan_partition_layout_evolution(spark: SparkSession, sf_dir: str) -> DataFra
     instead of rewrite. Oracle recomputes the filtered rollup from raw
     orders, proving the two-layout union loses and duplicates
     nothing."""
-    import tempfile
-
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"rg_pevo_{tag}")
+    base = fixture_base(spark, sf_dir, "pevo")
     old_p, new_p = os.path.join(base, "spec1"), os.path.join(base, "spec2")
-    if not (
-        os.path.exists(os.path.join(old_p, "_SUCCESS"))
-        and os.path.exists(os.path.join(new_p, "_SUCCESS"))
-    ):
-        shutil.rmtree(base, ignore_errors=True)
+    if needs_build(base):
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_orderstatus"
         )
@@ -1216,6 +1169,7 @@ def scan_partition_layout_evolution(spark: SparkSession, sf_dir: str) -> DataFra
         o.filter(F.col("o_orderkey") % 2 == 0).write.partitionBy(
             "o_orderstatus"
         ).parquet(new_p)
+        mark_built(base)
 
     wanted = ["1-URGENT", "2-HIGH"]
     cols = ["o_orderkey", "o_orderpriority"]
@@ -1416,147 +1370,12 @@ def delete_merge_on_read_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Optimistic-concurrency commit protocol on the manifest log: conflict
-# DETECTION (atomic version-file creation), RESOLUTION (append rebases,
-# overlapping rewrite aborts) — completing the lakehouse write path that
+# Optimistic-concurrency commit protocol on the manifest log
+# (storage.commit_with_conflict_detection): conflict DETECTION (atomic
+# version-file creation), RESOLUTION (append rebases, overlapping rewrite
+# aborts) — completing the lakehouse write path that
 # sink_atomic_commit_protocol (single writer) started.
 # --------------------------------------------------------------------------
-def fixture_base(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """tmp-dir root for a per-(fixture, sf, session) lake fixture:
-    ``rg_{tag}_{md5(sf:tag:appid)[:10]}`` under tempfile.gettempdir().
-    ONE definition for the dozen fixture builders across
-    scale_joins/lakehouse_meta/foreach_sink — the scheme (what keys a
-    fixture is scoped by) must evolve in one place, not twelve."""
-    import tempfile
-
-    h = hashlib.md5(
-        (os.path.abspath(sf_dir) + f":{tag}:" + spark.sparkContext.applicationId)
-        .encode()
-    ).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"rg_{tag}_{h}")
-
-
-class CommitConflict(Exception):
-    """A concurrent commit replaced/removed files this writer read."""
-
-
-def _log_versions(base: str) -> list[int]:
-    return sorted(
-        int(f.split("-v")[1].split(".")[0])
-        for f in os.listdir(base)
-        if f.startswith("manifest-v") and f.endswith(".txt")
-    )
-
-
-def _log_read(base: str, v: int) -> list[str]:
-    with open(os.path.join(base, f"manifest-v{v}.txt")) as f:
-        return f.read().split()
-
-
-def atomic_claim(path: str, content: str) -> bool:
-    """Claim ``path`` with ``content`` atomically: fully write a unique
-    temp file (mkstemp — safe across processes AND threads; the .tmp
-    suffix keeps it invisible to the *.txt log scans), then hard-LINK
-    it to the target name — atomic create-WITH-content (the
-    object-store analog is an if-none-match PUT of the whole body).
-    Exactly one concurrent writer can win a name, and no reader ever
-    observes a claimed-but-empty file (an O_CREAT|O_EXCL-then-write
-    scheme would expose exactly that window). Returns False if the
-    name was already claimed. ONE definition for every claim site —
-    manifest commits, named refs, transaction roots — so a fix (e.g.
-    an fsync policy) reaches all of them."""
-    import tempfile
-
-    fd, tmp = tempfile.mkstemp(
-        prefix=os.path.basename(path) + ".", suffix=".tmp",
-        dir=os.path.dirname(path),
-    )
-    try:
-        with os.fdopen(fd, "w") as f:
-            f.write(content)
-        try:
-            os.link(tmp, path)
-        except FileExistsError:
-            return False
-        return True
-    finally:
-        os.remove(tmp)  # win, lose, or crash: never leak the temp
-
-
-def commit_with_conflict_detection(
-    base: str,
-    parent_v: int,
-    add: list[str],
-    remove: list[str],
-    read_set: set[str],
-    max_retries: int = 5,
-) -> tuple[int, int]:
-    """Optimistic commit: attempt to publish ``parent files - remove +
-    add`` as version parent+1. The version file is claimed by
-    hard-LINKING a fully-written temp file to the version name —
-    atomic create-WITH-content (the object-store analog is an
-    if-none-match PUT of the whole body): exactly one concurrent
-    writer can win a version number, and no reader can ever observe a
-    claimed-but-empty manifest (an os.open(O_EXCL)-then-write scheme
-    would expose exactly that window). A loser re-reads the log: if
-    every file in its ``read_set`` still exists in the new latest
-    version the change is independent — REBASE onto it and retry; if
-    a concurrent commit removed/replaced any file the writer's
-    outcome depends on, raise CommitConflict (ABORT — the lost-update
-    this protocol exists to prevent).
-
-    Read-set validation walks EVERY intervening commit
-    (parent+1..latest), not just the latest manifest: a file removed
-    and later re-added under the same name between the two (the ABA
-    case — e.g. a compaction dropped it, then an unrelated writer
-    appended a new file reusing the name) is still a conflict,
-    because the re-added file is not the bytes this writer read.
-    Delta and Iceberg validate per intervening commit for the same
-    reason.
-
-    Returns (committed_version, n_retries)."""
-    rm = set(remove)
-    v = parent_v
-
-    def log_read(base_: str, w: int) -> list[str]:
-        # a manifest this writer depends on can disappear mid-flight if
-        # snapshot expiry (lakehouse_meta.expire_snapshots) raced us —
-        # classify it as the commit conflict it is, never a raw
-        # FileNotFoundError the OCC protocol's callers don't handle
-        try:
-            return _log_read(base_, w)
-        except FileNotFoundError:
-            raise CommitConflict(
-                f"manifest v{w} was expired by a concurrent retention "
-                "pass — re-read the table and retry from a live snapshot"
-            ) from None
-
-    validated_thru = parent_v  # read_set checked against commits ≤ this
-    for attempt in range(max_retries + 1):
-        files = [b for b in log_read(base, v) if b not in rm] + add
-        target = os.path.join(base, f"manifest-v{v + 1}.txt")
-        if not atomic_claim(target, "\n".join(files)):
-            latest = _log_versions(base)[-1]
-            # validate read_set against EACH intervening commit:
-            # removal at any step aborts, even if a same-named file
-            # exists again in a later version (ABA)
-            prev = set(log_read(base, validated_thru))
-            for w in range(validated_thru + 1, latest + 1):
-                cur = set(log_read(base, w))
-                clobbered = read_set & (prev - cur)
-                if clobbered:
-                    raise CommitConflict(
-                        f"files {sorted(clobbered)} were removed by "
-                        f"concurrent commit v{w}"
-                    )
-                prev = cur
-            validated_thru = latest
-            v = latest  # independent change: rebase and retry
-            continue
-        return v + 1, attempt
-    raise CommitConflict(f"gave up after {max_retries} rebases")
-
-
 @query(
     "manifest_commit_conflict_detect",
     oracle="""
@@ -1615,8 +1434,7 @@ def manifest_commit_conflict_detect(spark: SparkSession, sf_dir: str) -> DataFra
         o.filter(F.col("o_orderkey") % 4 == residue).write.parquet(
             os.path.join(data, name)
         )
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("b1\nb2")
+    log_create(base, ["b1", "b2"])
 
     # all three writers stage against parent v1 BEFORE any commit lands
     o.filter(F.col("o_orderkey") % 4 == 1).coalesce(1).write.parquet(
@@ -1647,18 +1465,12 @@ def manifest_commit_conflict_detect(spark: SparkSession, sf_dir: str) -> DataFra
     except CommitConflict:
         n_aborts += 1
 
-    final_v = _log_versions(base)[-1]
-
-    def snap(v: int) -> DataFrame:
-        return spark.read.parquet(
-            *[os.path.join(data, b) for b in _log_read(base, v)]
-        )
-
-    v2 = snap(2).agg(
+    final_v = log_versions(base)[-1]
+    v2 = read_version(spark, base, 2).agg(
         F.count(F.lit(1)).alias("n_rows_v2"),
         F.sum("o_orderkey").cast("bigint").alias("checksum_v2"),
     )
-    fin = snap(final_v).agg(
+    fin = read_version(spark, base, final_v).agg(
         F.count(F.lit(1)).alias("n_rows_final"),
         F.sum("o_orderkey").cast("bigint").alias("checksum_final"),
         F.lit(final_v).cast("bigint").alias("final_version"),
@@ -1690,9 +1502,8 @@ def _ensure_cdc_table(spark: SparkSession, sf_dir: str) -> str:
 
     v1 = [f-keep, f-upd-v1, f-del]; v2 = [f-keep, f-upd-v2, f-ins]."""
     base = fixture_base(spark, sf_dir, "cdc")
-    if os.path.exists(os.path.join(base, "_READY")):
+    if not needs_build(base):
         return base
-    shutil.rmtree(base, ignore_errors=True)
     data = os.path.join(base, "data")
     os.makedirs(data)
 
@@ -1712,12 +1523,12 @@ def _ensure_cdc_table(spark: SparkSession, sf_dir: str) -> str:
     }
     for name, df in slices.items():
         df.write.parquet(os.path.join(data, name))
-    for v, files in ((1, "f-keep\nf-upd-v1\nf-del"), (2, "f-keep\nf-upd-v2\nf-ins")):
-        tmp = os.path.join(base, f"manifest-v{v}.txt.tmp")
-        with open(tmp, "w") as f:
-            f.write(files)
-        os.replace(tmp, os.path.join(base, f"manifest-v{v}.txt"))
-    open(os.path.join(base, "_READY"), "w").close()
+    log_create(base, ["f-keep", "f-upd-v1", "f-del"])
+    commit_with_conflict_detection(
+        base, 1, add=["f-upd-v2", "f-ins"], remove=["f-upd-v1", "f-del"],
+        read_set=set(),
+    )
+    mark_built(base)
     return base
 
 
@@ -1765,11 +1576,7 @@ def table_changes_cdc_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _ensure_cdc_table(spark, sf_dir)
     data = os.path.join(base, "data")
 
-    def files(v: int) -> list[str]:
-        with open(os.path.join(base, f"manifest-v{v}.txt")) as f:
-            return f.read().split()
-
-    v1, v2 = files(1), files(2)
+    v1, v2 = log_read(base, 1), log_read(base, 2)
     v1s, v2s = set(v1), set(v2)
     removed = [b for b in v1 if b not in v2s]
     added = [b for b in v2 if b not in v1s]
@@ -1990,8 +1797,7 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
     )
     t.filter(k % 3 == 0).write.parquet(os.path.join(data, "base"))
-    with open(os.path.join(base, "manifest-v1.txt"), "w") as f:
-        f.write("base")
+    log_create(base, ["base"])
 
     t.filter(k % 3 == 1).write.parquet(os.path.join(data, "cand-good"))
     t.filter(k % 3 == 2).withColumn(
@@ -2013,17 +1819,15 @@ def sink_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         violations[cand] = v
         if v == 0:
             commit_with_conflict_detection(
-                base, _log_versions(base)[-1], add=[cand], remove=[],
+                base, log_versions(base)[-1], add=[cand], remove=[],
                 read_set=set(),
             )
             n_published += 1
         else:
             n_rejected += 1  # staged dir stays an orphan for vacuum
 
-    final_v = _log_versions(base)[-1]
-    final = spark.read.parquet(
-        *[os.path.join(data, b) for b in _log_read(base, final_v)]
-    )
+    final_v = log_versions(base)[-1]
+    final = read_version(spark, base, final_v)
     return final.agg(
         F.count(F.lit(1)).alias("n_rows_final"),
         F.sum("o_orderkey").cast("bigint").alias("key_checksum_final"),

@@ -17,6 +17,16 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, np_dround
 from ..operators.similarity import cosine_topk, cosine_topk_lsh, embedding_neardup
 from ..sources import load_table
+from ..storage import (
+    CommitConflict,
+    commit_with_conflict_detection,
+    fixture_base,
+    log_create,
+    log_read,
+    log_versions,
+    mark_built,
+    needs_build,
+)
 from ..functions.diff import (
     one_sided_diff_count,
     symmetric_diff_count,
@@ -1793,18 +1803,10 @@ def _ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
     append (mtime equality)."""
     import json
     import os
-    import shutil
-
-    from .scale_joins import (
-        atomic_claim,
-        commit_with_conflict_detection,
-        fixture_base,
-    )
 
     base = fixture_base(spark, sf_dir, "vix")
-    if os.path.exists(os.path.join(base, "_READY")):
+    if not needs_build(base):
         return base
-    shutil.rmtree(base, ignore_errors=True)
     data = os.path.join(base, "data")
     os.makedirs(data)
 
@@ -1834,10 +1836,7 @@ def _ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
 
     cents = spark.read.parquet(os.path.join(data, "centroids_v1"))
     _vix_assign(v1, cents).write.parquet(os.path.join(data, "idx_base"))
-    assert atomic_claim(
-        os.path.join(base, "manifest-v1.txt"),
-        "\n".join(["vec_base", "centroids_v1", "idx_base"]),
-    )
+    log_create(base, ["vec_base", "centroids_v1", "idx_base"])
 
     # --- the APPEND: maintenance touches O(batch), never the corpus
     idx_mtimes = {
@@ -1871,7 +1870,7 @@ def _ensure_vector_index(spark: SparkSession, sf_dir: str) -> str:
             },
             f,
         )
-    open(os.path.join(base, "_READY"), "w").close()
+    mark_built(base)
     return base
 
 
@@ -2003,11 +2002,9 @@ def vector_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
 
-    from .scale_joins import _log_read, _log_versions
-
     base = _ensure_vector_index(spark, sf_dir)
     data = os.path.join(base, "data")
-    v2 = _log_read(base, 2)
+    v2 = log_read(base, 2)
     vec_shards = [s for s in v2 if s.startswith("vec_")]
     idx_shards = [s for s in v2 if s.startswith("idx_")]
     vecs = spark.read.parquet(
@@ -2054,8 +2051,8 @@ def vector_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with open(os.path.join(base, "_AUDIT")) as f:
         audit = json.load(f)
-    versions = _log_versions(base)
-    v1 = _log_read(base, 1)
+    versions = log_versions(base)
+    v1 = log_read(base, 1)
     occ_ok = versions == [1, 2] and sorted(v2) == sorted(
         v1 + ["vec_batch", "idx_batch"]
     )
@@ -2153,14 +2150,6 @@ def stream_vector_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.similarity import with_norm
     from ..streaming.windowed import _stream_session
-    from .scale_joins import (
-        atomic_claim,
-        commit_with_conflict_detection,
-        fixture_base,
-        _log_read,
-        _log_versions,
-    )
-
     s = _stream_session(spark)
     base = fixture_base(spark, sf_dir, "vixs")
     # the append/replay protocol IS the operator — rebuild per run
@@ -2221,10 +2210,7 @@ def stream_vector_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).coalesce(1).write.parquet(os.path.join(data, "centroids_v1"))
     cents = spark.read.parquet(os.path.join(data, "centroids_v1")).localCheckpoint()
     _vix_assign(v1, cents).write.parquet(os.path.join(data, "idx_base"))
-    assert atomic_claim(
-        os.path.join(base, "manifest-v1.txt"),
-        "\n".join(["vec_base", "centroids_v1", "idx_base"]),
-    )
+    log_create(base, ["vec_base", "centroids_v1", "idx_base"])
 
     # orphan staging below reads slice-0; the stream reads all three
     slice_thread.join()
@@ -2232,8 +2218,8 @@ def stream_vector_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise slice_box["err"]  # type: ignore[misc]
 
     def append_epoch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _log_versions(base)[-1]
-        if f"idx_e{batch_id}" in set(_log_read(base, latest)):
+        latest = log_versions(base)[-1]
+        if f"idx_e{batch_id}" in set(log_read(base, latest)):
             return  # replay: this epoch's shards are already committed
         # mode("overwrite"): a crash BETWEEN the shard write and the
         # OCC commit leaves orphan dirs no manifest references; the
@@ -2282,7 +2268,7 @@ def stream_vector_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    versions_before_replay = _log_versions(base)
+    versions_before_replay = log_versions(base)
     # the staged orphan was fully replaced by the retried micro-batch
     n_e0 = spark.read.parquet(os.path.join(data, "vec_e0")).count()
     n_slice0 = s.read.parquet(os.path.join(src, "slice-0.parquet")).count()
@@ -2290,11 +2276,11 @@ def stream_vector_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # THE REPLAY: re-deliver epoch 1 (crash-before-checkpoint-ack path)
     append_epoch(s.read.parquet(os.path.join(src, "slice-1.parquet")), 1)
-    versions_after_replay = _log_versions(base)
+    versions_after_replay = log_versions(base)
     replay_ok = versions_after_replay == versions_before_replay
 
     head_v = versions_after_replay[-1]
-    head = _log_read(base, head_v)
+    head = log_read(base, head_v)
     vec_shards = sorted(x for x in head if x.startswith("vec_"))
     idx_shards = sorted(x for x in head if x.startswith("idx_"))
     occ_ok = (
@@ -2437,18 +2423,9 @@ def vector_index_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     LUT is exactly the IVF-PQ deployment shape."""
     import json
     import os
-    import shutil
 
     import numpy as np
     import pandas as pd
-
-    from .scale_joins import (
-        atomic_claim,
-        commit_with_conflict_detection,
-        fixture_base,
-        _log_read,
-        _log_versions,
-    )
 
     M, DSUB, K = _PQ_M, _PQ_DSUB, _PQ_K
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -2481,8 +2458,7 @@ def vector_index_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = fixture_base(spark, sf_dir, "vixpq")
     data = os.path.join(base, "data")
-    if not os.path.exists(os.path.join(base, "_READY")):
-        shutil.rmtree(base, ignore_errors=True)
+    if needs_build(base):
         os.makedirs(data)
         e.filter(F.col("vec_id") % 4 != 0).write.parquet(
             os.path.join(data, "vec_base")
@@ -2493,10 +2469,7 @@ def vector_index_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(os.path.join(data, "vec_base")).mapInPandas(
             encode, "vec_id long, codes array<int>"
         ).write.parquet(os.path.join(data, "codes_base"))
-        assert atomic_claim(
-            os.path.join(base, "manifest-v1.txt"),
-            "\n".join(["vec_base", "codes_base"]),
-        )
+        log_create(base, ["vec_base", "codes_base"])
         # the APPEND: encode only the batch against the frozen codebook
         mtimes = {
             p: os.path.getmtime(os.path.join(data, "codes_base", p))
@@ -2526,14 +2499,14 @@ def vector_index_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 },
                 f,
             )
-        open(os.path.join(base, "_READY"), "w").close()
+        mark_built(base)
 
     with open(os.path.join(base, "_AUDIT")) as f:
         audit = json.load(f)
     assert audit["o_batch"], "batch encode read v1 vector files"
     assert audit["untouched"], "append rewrote the v1 code shard"
 
-    head = _log_read(base, _log_versions(base)[-1])
+    head = log_read(base, log_versions(base)[-1])
     code_shards = sorted(x for x in head if x.startswith("codes_"))
     stored = spark.read.parquet(
         *[os.path.join(data, s) for s in code_shards]
@@ -2997,15 +2970,6 @@ def vector_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..operators.similarity import with_norm
-    from .scale_joins import (
-        CommitConflict,
-        atomic_claim,
-        commit_with_conflict_detection,
-        fixture_base,
-        _log_read,
-        _log_versions,
-    )
-
     base = fixture_base(spark, sf_dir, "vixrb")
     # the conflicting-commit protocol IS the operator — rebuild per run
     shutil.rmtree(base, ignore_errors=True)
@@ -3034,10 +2998,7 @@ def vector_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cents_v1 = make_centroids(v1_vecs, _VIX_CELLS, "centroids_v1")
     _vix_assign(v1_vecs, cents_v1).write.parquet(os.path.join(data, "idx_base"))
-    assert atomic_claim(
-        os.path.join(base, "manifest-v1.txt"),
-        "\n".join(["vec_base", "centroids_v1", "idx_base"]),
-    )
+    log_create(base, ["vec_base", "centroids_v1", "idx_base"])
 
     # --- the IN-FLIGHT append: staged under the v1 quantizer
     batch = emb.filter(F.col("vec_id") % 4 == 0).localCheckpoint()
@@ -3178,9 +3139,9 @@ def vector_index_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- attestation twins over the FINAL stored state
-    versions = _log_versions(base)
-    head = set(_log_read(base, versions[-1]))
-    v2_set = set(_log_read(base, 2))
+    versions = log_versions(base)
+    head = set(log_read(base, versions[-1]))
+    v2_set = set(log_read(base, 2))
     all_vecs = spark.read.parquet(
         os.path.join(data, "vec_base"), os.path.join(data, "vec_batch")
     ).localCheckpoint()
@@ -3991,14 +3952,6 @@ def stream_knn_graph_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         signlsh_codes_udf,
     )
     from ..streaming.windowed import _stream_session
-    from .scale_joins import (
-        atomic_claim,
-        commit_with_conflict_detection,
-        fixture_base,
-        _log_read,
-        _log_versions,
-    )
-
     P, L, SEED, K = 4, 12, 7, _KNN_GRAPH_K  # pinned: planes are index state
     s = _stream_session(spark)
     base = fixture_base(spark, sf_dir, "sknn")
@@ -4094,10 +4047,7 @@ def stream_knn_graph_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(data, "graph_base")
         ),
     )
-    assert atomic_claim(
-        os.path.join(base, "manifest-v1.txt"),
-        "\n".join(["vec_base", "postings_base", "graph_base"]),
-    )
+    log_create(base, ["vec_base", "postings_base", "graph_base"])
 
     # the stream below consumes the slice files — staging must be done
     slice_thread.join()
@@ -4158,8 +4108,8 @@ def stream_knn_graph_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch_audits: list[bool] = []
 
     def append_epoch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _log_versions(base)[-1]
-        head_now = set(_log_read(base, latest))
+        latest = log_versions(base)[-1]
+        head_now = set(log_read(base, latest))
         if f"graph_e{batch_id}" in head_now:
             return  # replay: this epoch is already committed
         # the delta flow reads the micro-batch rows DIRECTLY instead of
@@ -4256,14 +4206,14 @@ def stream_knn_graph_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    versions_before_replay = _log_versions(base)
+    versions_before_replay = log_versions(base)
 
     # THE REPLAY: re-deliver epoch 1 (crash-before-checkpoint-ack path)
     append_epoch(s.read.parquet(os.path.join(src, "slice-1.parquet")), 1)
-    versions_after_replay = _log_versions(base)
+    versions_after_replay = log_versions(base)
     replay_ok = versions_after_replay == versions_before_replay
 
-    head = set(_log_read(base, versions_after_replay[-1]))
+    head = set(log_read(base, versions_after_replay[-1]))
     occ_ok = versions_after_replay == [1, 2, 3, 4] and head == {
         "vec_base", "postings_base", "graph_base",
         "vec_e0", "postings_e0", "graph_e0",

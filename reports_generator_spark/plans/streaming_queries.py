@@ -549,17 +549,13 @@ def stream_incremental_availablenow(spark: SparkSession, sf_dir: str) -> DataFra
     proportional to NEW data only. Completes the streaming family's
     batch-boundary story (availableNow keys exist for aggregation;
     this one pins the file-source INCREMENTALITY contract itself)."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from ..sources import load_table
+    from ..storage import fixture_base
 
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"rg_incr_{tag}")
+    base = fixture_base(spark, sf_dir, "incr")
     shutil.rmtree(base, ignore_errors=True)
     inp, outp, chk = (os.path.join(base, d) for d in ("in", "out", "chk"))
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, sql_dround
 from ..operators.asof import asof_join
 from ..sources import load_table
+from ..storage import fixture_base
 from .registry import query
 
 _VAL = "CAST(value AS DECIMAL(18,6))"
@@ -1056,20 +1057,14 @@ def sink_mode_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     The probe-then-write pattern is what makes nightly re-ingest
     idempotent at the job level; row-level idempotency is the
     companion merge_upsert / write_parquet_idempotent."""
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
     from ..ingest.sinks import dataset_exists
 
     o = load_table(spark, sf_dir, "orders")
-    # appId in the tag: concurrent sessions (pytest workers / bench
-    # overlap) get isolated fixture dirs — no rmtree/append races
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"rg_sink_mode_{tag}")
+    # appId-scoped (fixture_base): concurrent sessions (pytest workers /
+    # bench overlap) get isolated fixture dirs — no rmtree/append races
+    path = fixture_base(spark, sf_dir, "sink_mode")
     shutil.rmtree(path, ignore_errors=True)  # fixture reset, not semantics
 
     for part in (

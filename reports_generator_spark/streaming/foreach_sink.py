@@ -30,6 +30,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..storage import atomic_claim, fixture_base, mark_built, needs_build
 from .windowed import _stream_events, _stream_session
 
 
@@ -103,18 +104,16 @@ def exactly_once_publish(batch_df: DataFrame, batch_id: int, target: str) -> str
     1. STAGE the batch under ``_staged/epoch-{id}-{uuid}`` (a crash
        here leaves an unreferenced orphan — vacuum territory, never
        visible to readers);
-    2. CLAIM ``_log/epoch-{id}.txt`` by hard-linking a fully-written
-       temp file containing the staged dir's name (atomic
-       create-with-content, same mechanics as the manifest log's OCC
-       claim) — exactly one attempt per epoch can win.
+    2. CLAIM ``_log/epoch-{id}.txt`` with the staged dir's name
+       through storage.atomic_claim (atomic create-with-content, the
+       same claim as the manifest log's OCC commit) — exactly one
+       attempt per epoch can win.
 
     A replayed batch (same batch_id after crash-before-checkpoint-ack)
     finds the marker, removes its own re-staged dir and reports
     ``replay-skipped`` — readers resolve markers, so each epoch's rows
     are visible EXACTLY once no matter how many times the engine
     re-delivers it."""
-    import tempfile
-
     staged_rel = f"epoch-{batch_id}-{uuid.uuid4().hex[:8]}"
     staged = os.path.join(target, "_staged", staged_rel)
     log_dir = os.path.join(target, "_log")
@@ -127,22 +126,12 @@ def exactly_once_publish(batch_df: DataFrame, batch_id: int, target: str) -> str
         # guards the stage-vs-claim race this check can't see
         return "replay-skipped"
     batch_df.write.parquet(staged)
-    fd, tmp = tempfile.mkstemp(
-        prefix=f"epoch-{batch_id}.", suffix=".tmp", dir=log_dir
-    )
-    try:
-        with os.fdopen(fd, "w") as f:
-            f.write(staged_rel)
-        try:
-            os.link(tmp, marker)
-        except FileExistsError:
-            # the epoch already published (this is a replay): drop the
-            # re-staged copy — the first publication stays the only one
-            shutil.rmtree(staged, ignore_errors=True)
-            return "replay-skipped"
+    if atomic_claim(marker, staged_rel):
         return "published"
-    finally:
-        os.remove(tmp)
+    # the epoch already published (this is a replay): drop the
+    # re-staged copy — the first publication stays the only one
+    shutil.rmtree(staged, ignore_errors=True)
+    return "replay-skipped"
 
 
 def read_published(spark: SparkSession, target: str) -> DataFrame:
@@ -171,8 +160,6 @@ def stream_exactly_once_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine column (event_id is unique in the fixture, so any
     double-publish would surface as n_duplicate_rows > 0)."""
     s = _stream_session(spark)
-    from ..plans.scale_joins import fixture_base
-
     base = fixture_base(spark, sf_dir, "eos")
     src = os.path.join(base, "src")
     target = os.path.join(base, "table")
@@ -302,8 +289,6 @@ def stream_cdc_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     key's raw history instead). Final dimension ≡ the batch
     scd2_intervals answer regardless of slicing — the SAME oracle
     text attests both keys."""
-    import hashlib
-
     spark = _stream_session(spark)
     from pyspark.sql.types import TimestampNTZType
 
@@ -314,13 +299,9 @@ def stream_cdc_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     ev = ev.select("user_id", "event_type", "ts", "event_id")
 
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"rg_cdcscd2_{tag}")
+    base = fixture_base(spark, sf_dir, "cdcscd2")
     src = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(base, "_READY")):
-        shutil.rmtree(base, ignore_errors=True)
+    if needs_build(base):
         os.makedirs(src)
         # time-sliced epochs: exact terciles of the ts order (the CDC
         # shape); quantiles over the epoch seconds since approxQuantile
@@ -344,7 +325,7 @@ def stream_cdc_to_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.copy(os.path.join(tmp, f), dst)
             os.utime(dst, (t0 + 100 * i, t0 + 100 * i))
             shutil.rmtree(tmp)
-        open(os.path.join(base, "_READY"), "w").close()
+        mark_built(base)
 
     state = os.path.join(base, f"state_{uuid.uuid4().hex[:8]}")
 

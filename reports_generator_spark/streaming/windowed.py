@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
+from ..storage import fixture_base, mark_built, needs_build
+
 
 def _stream_session(spark: SparkSession) -> SparkSession:
     """Clone the session for a streaming run (same SparkContext, own
@@ -293,22 +295,16 @@ def stream_watermark_late_drop(
     rows only — the DuckDB oracle states exactly that slice. Returns
     (result_df, query_progress) so tests can assert the drop metrics.
     """
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     s = _stream_session(spark)
     ev = _stream_events_batchdf(s, sf_dir)
     mx = ev.agg(F.max("ts")).first()[0]  # scalar-only collect
 
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"rg_wmdrop_{tag}")
+    base = fixture_base(spark, sf_dir, "wmdrop")
     src = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(base, "_READY")):
-        shutil.rmtree(base, ignore_errors=True)
+    if needs_build(base):
         os.makedirs(src)
         slices = {
             "batch-a": (F.col("event_id") % 3 == 0) | (F.col("ts") == mx),
@@ -325,7 +321,7 @@ def stream_watermark_late_drop(
             shutil.copy(os.path.join(tmp, f), dst)
             os.utime(dst, (t + 100 * i, t + 100 * i))  # mtime = batch order
             shutil.rmtree(tmp)
-        open(os.path.join(base, "_READY"), "w").close()
+        mark_built(base)
 
     schema = s.read.parquet(src).schema
     stream = (
@@ -401,22 +397,16 @@ def stream_session_window(
     (gap-equal event starts a NEW session; window end exclusive).
     Returns (result_df, query_progress) so tests can assert the
     eviction/withheld-state metrics."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     s = _stream_session(spark)
     ev = _stream_events_batchdf(s, sf_dir)
     mx = ev.agg(F.max("ts")).first()[0]  # scalar-only collect
 
-    tag = hashlib.md5(
-        (os.path.abspath(sf_dir) + ":" + spark.sparkContext.applicationId).encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"rg_sesswin_{tag}")
+    base = fixture_base(spark, sf_dir, "sesswin")
     src = os.path.join(base, "src")
-    if not os.path.exists(os.path.join(base, "_READY")):
-        shutil.rmtree(base, ignore_errors=True)
+    if needs_build(base):
         os.makedirs(src)
         sentinel = s.range(1).select(
             F.lit(-1).cast("bigint").alias("event_id"),
@@ -437,7 +427,7 @@ def stream_session_window(
             shutil.copy(os.path.join(tmp, f), dst)
             os.utime(dst, (t + 100 * i, t + 100 * i))  # mtime = batch order
             shutil.rmtree(tmp)
-        open(os.path.join(base, "_READY"), "w").close()
+        mark_built(base)
 
     schema = s.read.parquet(src).schema
     stream = (

@@ -212,6 +212,35 @@ def test_cc_local_fast_path_matches_iterative(spark, monkeypatch):
     assert (30, 0) in fast  # chain collapses to min label 0
 
 
+def test_cc_null_endpoint_dropped_identically_on_every_path(spark, monkeypatch):
+    """An edge with a null endpoint is dropped before anything else:
+    the union-find fast path, the iterative path and large/small-star
+    return the same long-typed rows, and null is never a node (a null
+    used to reach the fast path as a NaN float id, on which its
+    union-find never terminates)."""
+    from pyspark.sql.types import LongType
+
+    from reports_generator_spark.operators import graph as G
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, None), (10, 11)], "src long, dst long"
+    )
+    expected = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+
+    def rows(out):
+        assert [f.dataType for f in out.schema.fields] == [LongType(), LongType()]
+        got = [(r["node"], r["cluster_id"]) for r in out.collect()]
+        assert all(isinstance(v, int) for pair in got for v in pair)
+        assert len(got) == len(set(got))
+        return set(got)
+
+    fast = rows(G.connected_components(df))
+    star = rows(G.connected_components_star(df))
+    monkeypatch.setattr(G, "_CC_LOCAL_EDGE_CAP", -1)
+    iterative = rows(G.connected_components(df))
+    assert fast == iterative == star == expected
+
+
 def test_pagerank_isolated_pair_and_star(spark):
     """Stationary sanity on known topologies: an isolated edge
     converges to rank 1.0 on both ends; a star's hub outranks its

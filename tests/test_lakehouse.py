@@ -9,7 +9,7 @@ import pytest
 from conftest import SF_DIR
 
 from reports_generator_spark.plans import registry
-from reports_generator_spark.plans.scale_joins import (
+from reports_generator_spark.storage import (
     CommitConflict,
     commit_with_conflict_detection,
 )
@@ -102,6 +102,42 @@ def test_commit_retry_chain_across_multiple_losses(log):
     )
     assert v == 4 and retries >= 1
     assert set(_read(log, 4)) == {"b1", "b2", "b3", "b4", "b5"}
+
+
+def test_log_create_refuses_to_overwrite_existing_v1(log):
+    """Creating a table goes through the atomic claim: a second create
+    on a dir that already holds v1 fails and the first manifest is
+    left byte-identical (a plain open(..., "w") would clobber it)."""
+    from reports_generator_spark.storage import log_create
+
+    with open(os.path.join(log, "manifest-v1.txt")) as f:
+        before = f.read()
+    with pytest.raises(FileExistsError):
+        log_create(log, ["other"])
+    with open(os.path.join(log, "manifest-v1.txt")) as f:
+        assert f.read() == before
+    assert not [f for f in os.listdir(log) if f.endswith(".tmp")]
+
+
+def test_half_built_fixture_dir_is_rebuilt(tmp_path):
+    """A fixture dir without the build-once marker (a crash mid-build)
+    is wiped and reported as needing a build; once marked, it is kept
+    as is."""
+    from reports_generator_spark.storage import mark_built, needs_build
+
+    base = str(tmp_path / "fx")
+    os.makedirs(base)
+    with open(os.path.join(base, "partial.parquet"), "w") as f:
+        f.write("torn")
+    assert needs_build(base)
+    assert not os.path.exists(base)  # half-built leftovers are gone
+
+    os.makedirs(base)
+    with open(os.path.join(base, "done.parquet"), "w") as f:
+        f.write("whole")
+    mark_built(base)
+    assert not needs_build(base)
+    assert os.path.exists(os.path.join(base, "done.parquet"))
 
 
 # --------------------------------------------------------------------------
@@ -376,7 +412,7 @@ def _mklog(base, versions):
 
 
 def test_expire_snapshots_retention_boundary(tmp_path):
-    from reports_generator_spark.plans.lakehouse_meta import expire_snapshots
+    from reports_generator_spark.storage import expire_snapshots
 
     base = str(tmp_path)
     _mklog(base, [["b0"], ["b0", "b1"], ["b0c", "b1"], ["b0c", "b1", "b2"]])
@@ -392,7 +428,7 @@ def test_expire_snapshots_retention_boundary(tmp_path):
 
 
 def test_expire_snapshots_keep_all_is_noop(tmp_path):
-    from reports_generator_spark.plans.lakehouse_meta import expire_snapshots
+    from reports_generator_spark.storage import expire_snapshots
 
     base = str(tmp_path)
     _mklog(base, [["b0"], ["b0", "b1"]])
@@ -402,7 +438,7 @@ def test_expire_snapshots_keep_all_is_noop(tmp_path):
 
 
 def test_expire_snapshots_must_keep_at_least_one(tmp_path):
-    from reports_generator_spark.plans.lakehouse_meta import expire_snapshots
+    from reports_generator_spark.storage import expire_snapshots
 
     base = str(tmp_path)
     _mklog(base, [["b0"]])
@@ -414,7 +450,7 @@ def test_expire_snapshots_file_shared_with_live_version_survives(tmp_path):
     """A file referenced by BOTH an expired and a kept version must
     NOT be reported vacuumable — deleting it would corrupt a live
     snapshot."""
-    from reports_generator_spark.plans.lakehouse_meta import expire_snapshots
+    from reports_generator_spark.storage import expire_snapshots
 
     base = str(tmp_path)
     _mklog(base, [["shared", "old"], ["shared", "new"]])
@@ -606,7 +642,7 @@ def test_commit_against_expired_snapshot_raises_commit_conflict(log):
     """A writer whose parent snapshot was expired by a concurrent
     retention pass must get CommitConflict (re-read and retry), never
     a raw FileNotFoundError the OCC callers don't handle."""
-    from reports_generator_spark.plans.lakehouse_meta import expire_snapshots
+    from reports_generator_spark.storage import expire_snapshots
 
     commit_with_conflict_detection(log, 1, add=["b3"], remove=[], read_set=set())
     commit_with_conflict_detection(log, 2, add=["b4"], remove=[], read_set=set())
@@ -756,10 +792,7 @@ def test_root_claim_is_atomic_and_loser_conflicts(log):
         publish_root,
         read_root,
     )
-    from reports_generator_spark.plans.scale_joins import (
-        CommitConflict,
-        atomic_claim,
-    )
+    from reports_generator_spark.storage import CommitConflict, atomic_claim
 
     assert atomic_claim(os.path.join(log, "root-v1.txt"), "fact 1\nsummary 1")
     # a second writer claiming the same root name loses, with content intact
@@ -879,7 +912,7 @@ def test_schema_evolution_occ_time_travel_and_conflict(spark):
         evolve_schema,
         read_evolved,
     )
-    from reports_generator_spark.plans.scale_joins import CommitConflict
+    from reports_generator_spark.storage import CommitConflict
 
     sf = "/root/testdata/sf0.001"
     base = build_evolution_table(spark, sf, "evo_test")
@@ -919,7 +952,7 @@ def test_schema_version_claim_is_atomic(log):
     content re-claims idempotently, different content raises
     CommitConflict (the caller re-evolves under a fresh version)."""
     from reports_generator_spark.plans.lakehouse_meta import write_schema_version
-    from reports_generator_spark.plans.scale_joins import CommitConflict
+    from reports_generator_spark.storage import CommitConflict
 
     cols_a = [{"logical": "a", "physical": "col_1", "type": "bigint"}]
     cols_b = [{"logical": "b", "physical": "col_9", "type": "bigint"}]
@@ -944,7 +977,7 @@ def test_vacuum_shared_root_refuses_base_relative_entries(tmp_path):
     from reports_generator_spark.plans.lakehouse_meta import (
         vacuum_shared_root,
     )
-    from reports_generator_spark.plans.scale_joins import atomic_claim
+    from reports_generator_spark.storage import atomic_claim
 
     base = os.path.join(str(tmp_path), "tbl")
     data = os.path.join(base, "data")

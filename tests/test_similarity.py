@@ -322,7 +322,7 @@ def test_vector_index_append_conflicts_with_requantization(spark, tmp_path):
 
     import pytest as _pt
 
-    from reports_generator_spark.plans.scale_joins import (
+    from reports_generator_spark.storage import (
         CommitConflict,
         atomic_claim,
         commit_with_conflict_detection,
@@ -368,9 +368,9 @@ def test_vector_index_append_conflicts_with_requantization(spark, tmp_path):
         read_set={"centroids_v1"},
     )
     assert v == 3 and retries >= 1
-    from reports_generator_spark.plans.scale_joins import _log_read
+    from reports_generator_spark.storage import log_read
 
-    assert sorted(_log_read(base2, 3)) == sorted(
+    assert sorted(log_read(base2, 3)) == sorted(
         ["vec_base", "centroids_v1", "idx_base",
          "vec_other", "idx_other", "vec_batch", "idx_batch"]
     )

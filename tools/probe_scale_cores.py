@@ -104,6 +104,7 @@ def main() -> None:
         "rows": rows,
     }
     print(json.dumps(out, indent=1))
+    os.makedirs(".scratch", exist_ok=True)
     with open(".scratch/probe_scale_cores.json", "w") as fh:
         json.dump(out, fh, indent=1)
 
